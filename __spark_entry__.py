@@ -1050,7 +1050,8 @@ def _stateful_sessions_eq_batch(spark: SparkSession, sf_dir: str) -> bool:
             .trigger(availableNow=True)
             .start()
         )
-        assert q.awaitTermination(300), "stateful-sessions replay did not complete within 300s"
+        if not q.awaitTermination(300):
+            raise TimeoutError("stateful-sessions replay did not complete within 300s")
         cols = ["uid", "session_start", "session_end", "n_events"]
         streamed = spark.sql(f"SELECT * FROM {name}").filter(
             F.col("uid") != sentinel_uid
@@ -1126,7 +1127,8 @@ def q_streaming_daily_users_eq(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # a hung stream must fail loudly, not proceed with a partial
         # snapshot into a confusing stream_eq_batch=false (ADVICE r04)
-        assert q.awaitTermination(300), "streaming snapshot did not complete within 300s"
+        if not q.awaitTermination(300):
+            raise TimeoutError("streaming snapshot did not complete within 300s")
         snap_rows = (
             read_sketch_table(spark, table)
             .select("day", hll_count_sketch(F.col("sketch")).alias("stream_est"))

@@ -3,19 +3,30 @@ DataFrame-level operators.
 
 Scale design (the part that matters at 10^12 rows):
 
-- ``hll_partial_sketches`` is a ``mapInArrow`` **map-side combine**: each
-  input partition folds its rows into one raw register array per group and
-  emits one ~(16 B..12 KB) sketch row per (partition, group). The shuffle
-  that follows carries only those sketches — never raw elements. This
-  mirrors the reference's batched ``pfAddMany`` hot path
-  (hyperloglog.c:1192-1219) with Arrow batches as the batch unit.
-- ``hll_merge_agg`` is the final/merge half: an associative-commutative
-  element-wise max (hyperloglog.c:1038-1077), safe under any partition
-  grouping or AQE re-plan.
+- ``hll_sketch`` / ``hll_count_distinct`` (and so ``hll_global_distinct``)
+  are two ``mapInArrow`` folds around one shuffle. The **partial fold**
+  hashes each input partition's rows straight out of the Arrow buffers
+  into one register state per group (sparse until
+  ``_SPARSE_PROMOTE_ENTRIES`` set registers, then a raw 2^p array) and
+  emits one private **raw partial** per (partition, group): a tag byte,
+  then packed ``idx << 8 | rho`` uint32 words or the raw registers — no
+  HYLL encoding. The partials are hash-partitioned on the keys (one
+  partition when unkeyed), and the **merge fold** makes one Python call
+  per partition: it folds every partial into the same sparse -> dense
+  state machine (max-merge, hyperloglog.c:1038-1077, exact under any
+  partitioning or AQE re-plan) and emits per group either the HYLL blob
+  (``codec.serialize``) or the estimate (``kernel.estimate``) — no
+  per-group UDF call, no second Python stage to count.
+- ``hll_partial_sketches`` is the same partial fold with HYLL-encoded
+  output, and ``make_hll_merge_agg`` / ``hll_count_sketch`` merge and
+  count stored HYLL blobs: the public surfaces for SQL, streaming and
+  resumable pipelines. The partial fold mirrors the reference's batched
+  ``pfAddMany`` hot path (hyperloglog.c:1192-1219) with Arrow batches as
+  the batch unit.
 - Grouped-agg pandas UDF ``hll_sketch_agg`` is also provided for SQL
   composition (`GROUP BY` over raw values); note Spark executes grouped-agg
-  pandas UDFs with a full shuffle of input rows, so the two-phase operator
-  above is the preferred path at scale.
+  pandas UDFs with a full shuffle of input rows, so the two-fold operators
+  above are the preferred path at scale.
 
 No per-row Python anywhere: hashing reads Arrow string buffers directly
 (offsets + data) and the per-batch work is numpy.
@@ -106,14 +117,25 @@ def _arrow_idx_rho(arr: pa.Array, p: int) -> tuple[np.ndarray, np.ndarray, np.nd
     return idx, rho, valid
 
 
+# The one NaN key object: NaN != NaN, so key tuples holding NaNs from
+# different batches would never meet in a dict unless they share it.
+_NAN = float("nan")
+
+
 def _arrow_group_codes(rb: pa.RecordBatch, keys: list[str]) -> tuple[np.ndarray, list[tuple]]:
     """Per-row compact group codes + the unique key tuples they index,
     via Arrow dictionary encoding (no pandas/object materialization).
-    NULL key values group as None, matching groupBy semantics."""
+    NULL key values group as None, matching groupBy semantics; float keys
+    are normalized as Spark groups them (every NaN is ``_NAN``, -0.0 is
+    0.0); no keys is one group, ``()``."""
+    if not keys:
+        return np.zeros(rb.num_rows, dtype=np.int64), [()]
 
     def one(name: str) -> tuple[np.ndarray, list]:
         d = rb.column(rb.schema.get_field_index(name)).dictionary_encode()
         vals = d.dictionary.to_pylist()
+        if pa.types.is_floating(d.dictionary.type):
+            vals = [_NAN if v != v else 0.0 if v == 0 else v for v in vals]
         ind = d.indices
         if ind.null_count:
             import pyarrow.compute as pc
@@ -147,8 +169,141 @@ def _arrow_group_codes(rb: pa.RecordBatch, keys: list[str]) -> tuple[np.ndarray,
 
 
 # ---------------------------------------------------------------------------
+# Group folds: one sparse -> dense state machine for partials and merges
+# ---------------------------------------------------------------------------
+
+# A group's in-flight state: a sparse register set (sorted unique idx +
+# per-idx max rho) or, once promoted, a raw 2^p register array.
+_EMPTY_STATE = (np.empty(0, dtype=np.int64), np.empty(0, dtype=np.uint8))
+
+
+def _fold_update(state, idx: np.ndarray, rho: np.ndarray, p: int):
+    """Fold (idx, rho) observations into one group's state; returns the
+    new state. The only place the ``_SPARSE_PROMOTE_ENTRIES`` rule lives."""
+    if isinstance(state, np.ndarray):  # already dense
+        np.maximum.at(state, idx, rho)
+        return state
+    if len(idx) > _SPARSE_PROMOTE_ENTRIES:
+        # heavy slice: densify now — a raw buffer is cheaper than sorting
+        # large sparse merges
+        regs = kernel.sparse_to_registers(state[0], state[1], p)
+        np.maximum.at(regs, idx, rho)
+        return regs
+    ni, nr = kernel.sparse_update(state[0], state[1], idx, rho)
+    if len(ni) > _SPARSE_PROMOTE_ENTRIES:
+        return kernel.sparse_to_registers(ni, nr, p)
+    return ni, nr
+
+
+def _state_registers(state, p: int) -> np.ndarray:
+    return state if isinstance(state, np.ndarray) else kernel.sparse_to_registers(state[0], state[1], p)
+
+
+# Raw partials: the private wire format between the partial fold and the
+# merge fold of hll_sketch / hll_count_distinct — a tag byte, then either
+# little-endian uint32 ``idx << 8 | rho`` words (sparse) or the 2^p raw
+# uint8 registers (dense). No RLE, no estimate: the merge decodes it with
+# one vectorized pass and never sees HYLL.
+_RAW_SPARSE = 0
+_RAW_DENSE = 1
+
+
+def _pack_partial(state) -> bytes:
+    if isinstance(state, np.ndarray):
+        return bytes([_RAW_DENSE]) + state.tobytes()
+    idx, rho = state
+    return bytes([_RAW_SPARSE]) + ((idx.astype("<u4") << 8) | rho).astype("<u4").tobytes()
+
+
+def _unpack_partials(arr: pa.Array) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Raw partials -> (row, idx, rho) of every register they set, ``row``
+    indexing ``arr``. Sparse words of the whole batch are gathered and
+    split in one vectorized pass; dense partials contribute their nonzero
+    registers."""
+    data, offsets, _ = _arrow_to_buffers(arr)
+    starts, ends = offsets[:-1], offsets[1:]
+    plen = ends - starts - 1
+    dense = data[starts] == _RAW_DENSE
+    keep = np.repeat(~dense, plen + 1)
+    keep[starts] = False  # tag bytes
+    words = data[keep].view("<u4")
+    sparse_rows = np.flatnonzero(~dense)
+    rows = [np.repeat(sparse_rows, plen[sparse_rows] // 4)]
+    idx = [(words >> 8).astype(np.int64)]
+    rho = [(words & 0xFF).astype(np.uint8)]
+    for r in np.flatnonzero(dense).tolist():
+        regs = data[starts[r] + 1 : ends[r]]
+        nz = np.flatnonzero(regs)
+        rows.append(np.full(len(nz), r, dtype=np.int64))
+        idx.append(nz)
+        rho.append(regs[nz])
+    return np.concatenate(rows), np.concatenate(idx), np.concatenate(rho)
+
+
+def _hashed_values(value_col: str, p: int):
+    """Observations of a raw value column: (row, idx, rho) of every
+    non-NULL value (Spark aggregate semantics ignore NULLs)."""
+
+    def observe(rb: pa.RecordBatch) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+        idx, rho, valid = _arrow_idx_rho(rb.column(rb.schema.get_field_index(value_col)), p)
+        rows = np.arange(rb.num_rows) if valid is None else np.flatnonzero(valid)
+        return rows, idx, rho
+
+    return observe
+
+
+def _unpacked_partials(rb: pa.RecordBatch) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    return _unpack_partials(rb.column(rb.schema.get_field_index("sketch")))
+
+
+def _group_fold(keys: list[str], p: int, observe, finish, out_schema: StructType):
+    """The ``mapInArrow`` function of both halves of the aggregation: fold
+    every batch's observations into per-group states, then emit
+    ``keys... , finish(state)`` once per group seen. Every group present in
+    a batch gets a row, even if all its values are NULL (→ empty state);
+    a partition without rows emits nothing."""
+    arrow_schema = to_arrow_schema(out_schema)
+    out_col = out_schema.fieldNames()[-1]
+
+    def fold(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        acc: dict = {}
+        for rb in batches:
+            if rb.num_rows == 0:
+                continue
+            codes, groups = _arrow_group_codes(rb, keys)
+            for g in groups:
+                acc.setdefault(g, _EMPTY_STATE)
+            rows, idx, rho = observe(rb)
+            if len(idx) == 0:
+                continue
+            if len(groups) == 1:
+                acc[groups[0]] = _fold_update(acc[groups[0]], idx, rho, p)
+                continue
+            gc = codes[rows]
+            order = np.argsort(gc, kind="stable")
+            sc, si, sr = gc[order], idx[order], rho[order]
+            bounds = np.flatnonzero(np.diff(sc)) + 1
+            for s, e in zip([0, *bounds.tolist()], [*bounds.tolist(), len(sc)]):
+                g = groups[sc[s]]
+                acc[g] = _fold_update(acc[g], si[s:e], sr[s:e], p)
+        if not acc:
+            return
+        out = {k: [g[ki] for g in acc] for ki, k in enumerate(keys)}
+        out[out_col] = [finish(st) for st in acc.values()]
+        yield pa.RecordBatch.from_pydict(out, schema=arrow_schema)
+
+    return fold
+
+
+# ---------------------------------------------------------------------------
 # Map-side partial aggregation (the scale path)
 # ---------------------------------------------------------------------------
+
+def _partials(df: DataFrame, keys: list[str], value_col: str, p: int, finish) -> DataFrame:
+    out_schema = StructType([df.schema[k] for k in keys] + [StructField("sketch", BinaryType(), False)])
+    fold = _group_fold(keys, p, _hashed_values(value_col, p), finish, out_schema)
+    return df.select(*keys, value_col).mapInArrow(fold, schema=out_schema)
+
 
 def hll_partial_sketches(
     df: DataFrame,
@@ -156,7 +311,7 @@ def hll_partial_sketches(
     value_col: str,
     p: int = HLL_P_DEFAULT,
 ) -> DataFrame:
-    """Per-partition, per-group partial sketches via ``mapInArrow``.
+    """Per-partition, per-group partial HYLL sketches via ``mapInArrow``.
 
     Arrow-native end to end: value bytes are hashed straight out of the
     Arrow buffers and group codes come from Arrow dictionary encoding —
@@ -171,73 +326,12 @@ def hll_partial_sketches(
     groups (high-cardinality keys, rollups) costs O(set registers) per
     group, not 16 KB each. Densifying is max-merge-exact, so estimates
     are bit-identical to the always-dense path (tested).
+
+    This is the public, HYLL-encoded form of the fold (stored partials,
+    SQL ``hll_merge_agg``, streaming); ``hll_sketch`` runs the same fold
+    but ships raw partials.
     """
-    key_fields = [df.schema[k] for k in keys]
-    out_schema = StructType(list(key_fields) + [StructField("sketch", BinaryType(), False)])
-    arrow_schema = to_arrow_schema(out_schema)
-    m = kernel.m_for_p(p)
-    empty_i = np.empty(0, dtype=np.int64)
-    empty_r = np.empty(0, dtype=np.uint8)
-
-    def fold(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        acc: dict = {}
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            varr = rb.column(rb.schema.get_field_index(value_col))
-            idx, rho, valid = _arrow_idx_rho(varr, p)
-            if not keys:
-                # single group: go straight to dense (it will fill anyway)
-                regs = acc.setdefault((), np.zeros(m, dtype=np.uint8))
-                if len(idx):
-                    kernel.update_registers(regs, idx, rho)
-                continue
-            codes_full, uniques_rows = _arrow_group_codes(rb, keys)
-            # every group present in the batch gets a sketch, even if all of
-            # its values are NULL (→ empty sketch, count 0)
-            for row in uniques_rows:
-                if row not in acc:
-                    acc[row] = (empty_i, empty_r)
-            codes = codes_full[valid] if valid is not None else codes_full
-            if len(idx) == 0:
-                continue
-            order = np.argsort(codes, kind="stable")
-            sc = codes[order]
-            bounds = np.flatnonzero(np.diff(sc)) + 1
-            starts = np.concatenate(([0], bounds))
-            ends = np.concatenate((bounds, [len(sc)]))
-            si, sr = idx[order], rho[order]
-            for s, e in zip(starts.tolist(), ends.tolist()):
-                row = uniques_rows[sc[s]]
-                cur = acc[row]
-                if isinstance(cur, np.ndarray):  # already dense
-                    np.maximum.at(cur, si[s:e], sr[s:e])
-                    continue
-                if e - s > _SPARSE_PROMOTE_ENTRIES:
-                    # heavy group (big batch slice): densify now — a raw
-                    # buffer is cheaper than sorting large sparse merges
-                    regs = kernel.sparse_to_registers(cur[0], cur[1], p)
-                    np.maximum.at(regs, si[s:e], sr[s:e])
-                    acc[row] = regs
-                    continue
-                ni, nr = kernel.sparse_update(cur[0], cur[1], si[s:e], sr[s:e])
-                if len(ni) > _SPARSE_PROMOTE_ENTRIES:
-                    acc[row] = kernel.sparse_to_registers(ni, nr, p)
-                else:
-                    acc[row] = (ni, nr)
-        if not acc:
-            return
-        rows = list(acc.keys())
-        out = {k: [r[ki] for r in rows] for ki, k in enumerate(keys)}
-        out["sketch"] = [
-            codec.serialize(
-                v if isinstance(v := acc[r], np.ndarray) else kernel.sparse_to_registers(v[0], v[1], p)
-            )
-            for r in rows
-        ]
-        yield pa.RecordBatch.from_pydict(out, schema=arrow_schema)
-
-    return df.select(*keys, value_col).mapInArrow(fold, schema=out_schema)
+    return _partials(df, keys, value_col, p, lambda st: codec.serialize(_state_registers(st, p)))
 
 
 def hll_partial_sketches_multi(
@@ -273,7 +367,9 @@ def hll_partial_sketches_multi(
 
     from ..sketches.theta import _THETA_ONE, theta_fold, theta_serialize
 
-    assert all(c in value_cols for c in theta_cols)
+    missing = [c for c in theta_cols if c not in value_cols]
+    if missing:
+        raise ValueError(f"theta_cols {missing} are not in value_cols {value_cols}")
     out_schema = StructType(
         [StructField(f"sketch_{c}", BinaryType(), False) for c in value_cols]
         + [StructField(f"theta_{c}", BinaryType(), False) for c in theta_cols]
@@ -419,6 +515,28 @@ def hll_nonzero_registers(blobs: pd.Series) -> pd.Series:
 # DataFrame-level operators
 # ---------------------------------------------------------------------------
 
+def _merged(
+    df: DataFrame,
+    keys: list[str],
+    value_col: str,
+    p: int,
+    pre_repartition: int | None,
+    out_field: StructField,
+    finish,
+) -> DataFrame:
+    """Raw partial fold → hash shuffle on the keys (one partition when
+    unkeyed) → one merge fold per partition emitting ``finish(registers)``
+    per group."""
+    src = df
+    if pre_repartition and keys:
+        src = df.repartition(pre_repartition, *[F.col(k) for k in keys])
+    partials = _partials(src, keys, value_col, p, _pack_partial)
+    partials = partials.repartition(*[F.col(k) for k in keys]) if keys else partials.repartition(1)
+    out_schema = StructType([partials.schema[k] for k in keys] + [out_field])
+    fold = _group_fold(keys, p, _unpacked_partials, lambda st: finish(_state_registers(st, p)), out_schema)
+    return partials.mapInArrow(fold, schema=out_schema)
+
+
 def hll_sketch(
     df: DataFrame,
     keys: list[str],
@@ -427,21 +545,18 @@ def hll_sketch(
     *,
     pre_repartition: int | None = None,
 ) -> DataFrame:
-    """keys... + merged ``sketch`` per group (partial fold + sketch-only
-    shuffle + max-merge).
+    """keys... + merged HYLL ``sketch`` per group (partial fold + raw
+    partial shuffle + one merge fold per partition).
 
     ``pre_repartition=n`` first hash-partitions rows by the group keys so
     each partition's accumulator dict only holds its own groups — use when
-    group cardinality is high relative to executor memory.
+    group cardinality is high relative to executor memory. It bounds the
+    partial fold only: the merge fold holds every group of its shuffle
+    partition, whose size AQE's advisory partition size caps.
     """
-    src = df
-    if pre_repartition and keys:
-        src = df.repartition(pre_repartition, *[F.col(k) for k in keys])
-    partials = hll_partial_sketches(src, keys, value_col, p)
-    merge = make_hll_merge_agg(p)
-    if keys:
-        return partials.groupBy(*keys).agg(merge(F.col("sketch")).alias("sketch"))
-    return partials.agg(merge(F.col("sketch")).alias("sketch"))
+    return _merged(
+        df, keys, value_col, p, pre_repartition, StructField("sketch", BinaryType(), True), codec.serialize
+    )
 
 
 def hll_count_distinct(
@@ -454,16 +569,18 @@ def hll_count_distinct(
     pre_repartition: int | None = None,
 ) -> DataFrame:
     """APPROX COUNT DISTINCT of ``value_col`` per group — the engine's
-    flagship operator (the distributed pfAdd+pfCount+pfMerge pipeline)."""
-    sk = hll_sketch(df, keys, value_col, p, pre_repartition=pre_repartition)
-    return sk.select(*keys, hll_count_sketch(F.col("sketch")).alias(alias))
+    flagship operator (the distributed pfAdd+pfCount+pfMerge pipeline).
+    The merge fold estimates straight from the merged registers, so no
+    sketch is serialized."""
+    return _merged(df, keys, value_col, p, pre_repartition, StructField(alias, LongType(), True), kernel.estimate)
 
 
 def hll_global_distinct(df: DataFrame, value_col: str, p: int = HLL_P_DEFAULT) -> int:
-    """One global estimate. Partials tree-merge through a single tiny final
-    task (P x <=12 KB rows); the collect moves one integer to the driver."""
-    row = hll_count_distinct(df, [], value_col, p).collect()[0]
-    return row["approx_distinct"]
+    """One global estimate (0 for an empty input). Partials merge in a
+    single tiny final task (P x <=16 KB rows); the collect moves one
+    integer back."""
+    rows = hll_count_distinct(df, [], value_col, p).collect()
+    return rows[0]["approx_distinct"] if rows else 0
 
 
 # ---------------------------------------------------------------------------

@@ -42,7 +42,8 @@ def optimal_params(n_items: int, fp_rate: float = 0.01) -> tuple[int, int]:
 
 
 def empty_bloom(m_bits: int = 8192) -> np.ndarray:
-    assert m_bits % 64 == 0
+    if m_bits % 64:
+        raise ValueError(f"m_bits={m_bits} is not a multiple of 64")
     return np.zeros(m_bits // 64, dtype=np.uint64)
 
 

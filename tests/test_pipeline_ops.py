@@ -1411,3 +1411,11 @@ def test_dedup_paragraphs_partition_invariance_and_metachar_sep(spark):
 
     with _pytest.raises(ValueError, match=r"\\E"):
         dedup_paragraphs(dot, "doc_id", "text", sep="a\\Eb")
+
+
+def test_minhash_rejects_bands_not_dividing_num_hashes(spark):
+    from phphll_spark.operators import minhash_candidate_pairs
+
+    docs = spark.createDataFrame([(1, "some text")], "doc_id long, text string")
+    with pytest.raises(ValueError, match="not a multiple of bands"):
+        minhash_candidate_pairs(docs, "doc_id", "text", num_hashes=64, bands=10)

@@ -75,6 +75,22 @@ def test_shuffle_carries_sketches_not_rows(spark, pages_path):
     assert exchange_lines, plan
 
 
+def test_count_distinct_one_exchange_between_two_arrow_maps(spark, pages_path):
+    """Grouped and global hll_count_distinct: partial Arrow fold → ONE
+    shuffle → merge-and-estimate Arrow fold. No per-group pandas
+    aggregate and no scalar Python UDF stage."""
+    import re
+
+    pages = spark.read.parquet(pages_path)
+    for keys in (["lang"], []):
+        plan = _plan(hll_count_distinct(pages, keys, "url"), "simple")
+        nodes = [m.group(1) for l in plan.splitlines() if (m := re.match(r"[\s+\-:*()\d]*(\w+)", l))]
+        python_and_shuffle = [
+            n for n in nodes if n in ("MapInArrow", "Exchange", "AggregateInPandas", "ArrowEvalPython")
+        ]
+        assert python_and_shuffle == ["MapInArrow", "Exchange", "MapInArrow"], plan
+
+
 def test_whole_stage_codegen_on_native_paths(spark):
     """Text-analysis expressions stay inside WholeStageCodegen (JVM)."""
     from phphll_spark.functions import text as T

@@ -119,6 +119,11 @@ def test_bloom_no_false_negatives_bounded_false_positives():
     assert fp < 0.03  # target 1%, generous margin
 
 
+def test_bloom_rejects_width_not_multiple_of_64():
+    with pytest.raises(ValueError, match="multiple of 64"):
+        empty_bloom(100)
+
+
 def test_bloom_merge_laws():
     m, k = 4096, 5
     a, b = empty_bloom(m), empty_bloom(m)

@@ -233,3 +233,172 @@ def test_partial_sketches_multi_matches_separate_folds(spark):
     assert row["ea"] == ea  # NULL-skipping fused fold == separate folds
     assert row["eb"] == eb
     assert row["nf"] == 5_000
+
+
+def _local_registers(values, p):
+    """Serial single-machine fold of the non-NULL values."""
+    regs = kernel.empty_registers(p)
+    data, offsets = kernel.bytes_to_buffers([v.encode() for v in values if v is not None])
+    kernel.add_bytes(regs, data, offsets)
+    return regs
+
+
+def _assert_merge_matches_local(df, keys, rows, p):
+    """hll_sketch bytes == codec.serialize and hll_count_distinct ==
+    kernel.estimate of the locally folded registers, group for group."""
+    by_group: dict = {}
+    for r in rows:
+        by_group.setdefault(tuple(r[:-1]), []).append(r[-1])
+    want = {g: _local_registers(vals, p) for g, vals in by_group.items()}
+    sketches = {tuple(r[:-1]): bytes(r[-1]) for r in hll_sketch(df, keys, "v", p).collect()}
+    counts = {tuple(r[:-1]): r[-1] for r in hll_count_distinct(df, keys, "v", p).collect()}
+    assert set(sketches) == set(counts) == set(want)
+    for g, regs in want.items():
+        assert sketches[g] == codec.serialize(regs), g
+        assert counts[g] == kernel.estimate(regs), g
+    return want
+
+
+@pytest.mark.parametrize("p", [4, 10, 14, 18])
+def test_merge_fold_byte_identical_to_local_fold(spark, p):
+    """The raw-partial merge emits exactly the HYLL bytes and estimates of
+    a serial fold: NULL values and a NULL key, an all-NULL group (empty
+    sketch, count 0), and a group whose partials each stay below the
+    sparse promotion threshold but whose union crosses it in the merge."""
+    from phphll_spark.functions.sketch import _SPARSE_PROMOTE_ENTRIES
+
+    rows = [(f"g{i % 9}", None if i % 5 == 0 else f"v{i % 300}") for i in range(2000)]
+    rows += [(None, f"n{i}") for i in range(40)] + [("allnull", None)] * 3
+    rows += [("cross", f"x{i}") for i in range(5000)]
+    df = spark.createDataFrame(rows, "k string, v string").repartition(4)
+    want = _assert_merge_matches_local(df, ["k"], rows, p)
+    assert want[("allnull",)].max() == 0
+    if kernel.m_for_p(p) > _SPARSE_PROMOTE_ENTRIES:
+        cross = [
+            codec.info(bytes(r["sketch"]))["nonzero_registers"]
+            for r in hll_partial_sketches(df, ["k"], "v", p).collect()
+            if r["k"] == "cross"
+        ]
+        assert len(cross) == 4 and max(cross) <= _SPARSE_PROMOTE_ENTRIES
+        assert int((want[("cross",)] > 0).sum()) > _SPARSE_PROMOTE_ENTRIES
+    # unkeyed: one group over every value
+    _assert_merge_matches_local(df, [], [(v,) for _, v in rows], p)
+    assert hll_global_distinct(df, "v", p) == kernel.estimate(_local_registers([v for _, v in rows], p))
+
+
+def test_merge_fold_empty_input_partitions(spark):
+    rows = [("a", "x"), ("b", "y"), ("a", "z")]
+    df = spark.createDataFrame(rows, "k string, v string").repartition(16, "v")
+    assert df.rdd.glom().map(len).collect().count(0) >= 12
+    _assert_merge_matches_local(df, ["k"], rows, 14)
+    _assert_merge_matches_local(df, [], [(v,) for _, v in rows], 14)
+    empty = spark.createDataFrame([], "k string, v string")
+    assert hll_count_distinct(empty, [], "v").collect() == []
+    assert hll_global_distinct(empty, "v") == 0
+
+
+def test_merge_fold_float_keys_group_like_spark(spark):
+    """Every NaN key is one group and -0.0 groups with 0.0 (output 0.0),
+    as in Spark's groupBy, also when one merge partition's partials for a
+    group arrive in several Arrow batches."""
+    import math
+
+    nan = float("nan")
+    rows = [((nan, -0.0, 0.0, 1.5, None)[i % 5], f"v{i}") for i in range(400)]
+    df = spark.createDataFrame(rows, "k double, v string").repartition(4)
+
+    def canon(k):
+        return "NaN" if k != k else k
+
+    want: dict = {}
+    for k, v in rows:
+        want.setdefault(canon(k), []).append(v)
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "2")
+    try:
+        spark_keys = [r["k"] for r in df.groupBy("k").count().collect()]
+        sketches = [(r["k"], bytes(r["sketch"])) for r in hll_sketch(df, ["k"], "v").collect()]
+        counts = [(r["k"], r["approx_distinct"]) for r in hll_count_distinct(df, ["k"], "v").collect()]
+    finally:
+        spark.conf.set(conf, old)
+    assert len(sketches) == len(counts) == len(spark_keys) == len(want) == 4
+    for k, blob in sketches:
+        assert blob == codec.serialize(_local_registers(want[canon(k)], 14)), k
+    for k, n in counts:
+        assert n == kernel.estimate(_local_registers(want[canon(k)], 14)), k
+    signs = [[math.copysign(1.0, k) for k, *_ in out if k == 0] for out in (sketches, counts, [(k,) for k in spark_keys])]
+    assert signs == [[1.0]] * 3
+
+
+@pytest.mark.parametrize("p", list(range(4, 19)))
+def test_raw_partial_pack_unpack_roundtrip(p):
+    """Both raw-partial layouts, several to a batch, decode to exactly the
+    registers they were packed from."""
+    import numpy as np
+    import pyarrow as pa
+
+    from phphll_spark.functions.sketch import _pack_partial, _unpack_partials
+
+    rng = np.random.default_rng(p)
+    m = kernel.m_for_p(p)
+    max_rho = 64 - p + 1
+    sparse_idx = np.sort(rng.choice(m, size=min(m, 50), replace=False)).astype(np.int64)
+    sparse = (sparse_idx, rng.integers(1, max_rho + 1, len(sparse_idx)).astype(np.uint8))
+    dense = rng.integers(0, max_rho + 1, m).astype(np.uint8)
+    dense[[0, m - 1]] = max_rho
+    states = [sparse, dense, (np.empty(0, np.int64), np.empty(0, np.uint8)), dense.copy()]
+    rows, idx, rho = _unpack_partials(pa.array([_pack_partial(s) for s in states], pa.binary()))
+    for r, st in enumerate(states):
+        got = kernel.sparse_to_registers(idx[rows == r], rho[rows == r], p)
+        want = st if isinstance(st, np.ndarray) else kernel.sparse_to_registers(st[0], st[1], p)
+        assert (got == want).all(), r
+    assert (idx[rows == 0] == sparse[0]).all() and (rho[rows == 0] == sparse[1]).all()
+
+
+def test_merge_fold_promotes_across_batches():
+    """Partials arriving one per Arrow batch, each below the sparse
+    promotion threshold, fold through the partial fold's state machine:
+    the running union passes the threshold inside the merge, the group
+    densifies, and the output is still the serialized union."""
+    import numpy as np
+    import pyarrow as pa
+    from pyspark.sql.types import BinaryType, StringType, StructField, StructType
+
+    from phphll_spark.functions.sketch import (
+        _SPARSE_PROMOTE_ENTRIES,
+        _group_fold,
+        _pack_partial,
+        _state_registers,
+        _unpacked_partials,
+    )
+
+    p = 14
+    chunks = [[f"c{j}_{i}".encode() for i in range(1000)] for j in range(5)]
+    schema = pa.schema([("k", pa.string()), ("sketch", pa.binary())])
+    batches = []
+    for chunk in chunks:
+        data, offsets = kernel.bytes_to_buffers(chunk)
+        idx, rho = kernel.hash_idx_rho(kernel.murmur64a(data, offsets), p)
+        state = kernel.sparse_update(np.empty(0, np.int64), np.empty(0, np.uint8), idx, rho)
+        assert len(state[0]) < _SPARSE_PROMOTE_ENTRIES
+        batches.append(pa.record_batch([pa.array(["g"]), pa.array([_pack_partial(state)], pa.binary())], schema=schema))
+    out_schema = StructType([StructField("k", StringType()), StructField("sketch", BinaryType())])
+    final_states = []
+
+    def finish(state):
+        final_states.append(state)
+        return codec.serialize(_state_registers(state, p))
+
+    (out,) = list(_group_fold(["k"], p, _unpacked_partials, finish, out_schema)(iter(batches)))
+    want = _local_registers([b.decode() for c in chunks for b in c], p)
+    assert isinstance(final_states[0], np.ndarray) and int((want > 0).sum()) > _SPARSE_PROMOTE_ENTRIES
+    assert out.column(1).to_pylist() == [codec.serialize(want)]
+
+
+def test_multi_fold_rejects_theta_col_outside_value_cols(spark):
+    from phphll_spark.functions.sketch import hll_partial_sketches_multi
+
+    df = spark.createDataFrame([("a", "b")], "a string, b string")
+    with pytest.raises(ValueError, match="theta_cols"):
+        hll_partial_sketches_multi(df, ["a"], theta_cols=("b",))

@@ -340,3 +340,31 @@ def test_streaming_daily_users_eq_query(spark):
     rows = entry_mod.q_streaming_daily_users_eq(spark, "/root/testdata/sf0.001").collect()
     assert len(rows) > 0
     assert all(r["stream_eq_batch"] and r["within_bound"] for r in rows)
+
+
+def test_stream_replays_raise_on_timeout(spark, monkeypatch):
+    """A replay whose awaitTermination times out raises TimeoutError (not
+    an assert, which ``python -O`` strips) at both streaming replay sites
+    of ``__spark_entry__``."""
+    import datetime
+
+    from pyspark.sql.streaming.query import StreamingQuery
+
+    import __spark_entry__ as entry_mod
+
+    events = spark.createDataFrame(
+        [(datetime.datetime(2024, 9, 1, h), u) for h in range(4) for u in range(3)],
+        "ts timestamp, user_id long",
+    )
+
+    def timed_out(self, timeout=None):
+        self.stop()
+        return False
+
+    monkeypatch.setattr(entry_mod, "load_table", lambda spark, sf_dir, name: events)
+    monkeypatch.setattr(StreamingQuery, "awaitTermination", timed_out)
+    with pytest.raises(TimeoutError, match="stateful-sessions"):
+        entry_mod._stateful_sessions_eq_batch(spark, "unused")
+    monkeypatch.setattr(entry_mod, "_stateful_sessions_eq_batch", lambda spark, sf_dir: True)
+    with pytest.raises(TimeoutError, match="streaming snapshot"):
+        entry_mod.q_streaming_daily_users_eq(spark, "unused")
