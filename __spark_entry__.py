@@ -23,6 +23,7 @@ from __future__ import annotations
 
 import math
 import os
+import time
 from collections.abc import Callable
 
 import numpy as np
@@ -975,6 +976,25 @@ def q_session_stats_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     return session_stats(ev, "user_id", "ts", gap_seconds=1800)
 
 
+def _append_in_replay_order(frames: list[DataFrame], src: str) -> None:
+    """Append each frame to ``src`` as one parquet file, then stamp the
+    files with strictly increasing mtimes in write order. A file-stream
+    source replays files in mtime order; writes that land in one
+    timestamp tick would otherwise replay in directory-listing order."""
+    written: list[str] = []
+    for frame in frames:
+        frame.coalesce(1).write.mode("append").parquet(src)
+        written += sorted(
+            name
+            for name in os.listdir(src)
+            if not name.startswith((".", "_")) and name not in written  # data files only
+        )
+    stamp = time.time_ns()
+    for i, name in enumerate(written, 1):
+        ns = stamp + i * 1_000_000_000
+        os.utime(os.path.join(src, name), ns=(ns, ns))
+
+
 def _stateful_sessions_eq_batch(spark: SparkSession, sf_dir: str) -> bool:
     """Replay the user_id<20 events as file-source micro-batches through
     ``stateful_sessions`` (applyInPandasWithState, event-time timeout —
@@ -987,7 +1007,8 @@ def _stateful_sessions_eq_batch(spark: SparkSession, sf_dir: str) -> bool:
     contract), so a randomly-split replay could deliver an interleaved
     run AFTER its session was already emitted. The events are therefore
     split into four CONTIGUOUS time-range files written in ascending
-    order (file-source batches order by mtime): every interior gap's
+    order (file-source batches order by mtime, which
+    ``_append_in_replay_order`` makes strictly increasing): every interior gap's
     merge window then lies wholly inside its own file, and only the open
     trailing session ever crosses a batch boundary — exactly the
     streaming contract. A sentinel far-future single-row file is written
@@ -1020,21 +1041,21 @@ def _stateful_sessions_eq_batch(spark: SparkSession, sf_dir: str) -> bool:
         epoch = ev.select(F.unix_timestamp("ts").cast("double").alias("e"))
         cuts = [int(c) for c in epoch.stat.approxQuantile("e", [0.25, 0.5, 0.75], 0.0)]
         bounds = [None, *cuts, None]
+        parts = []
         for i in range(4):
             part = ev
             if bounds[i] is not None:
                 part = part.filter(F.unix_timestamp("ts") > bounds[i])
             if bounds[i + 1] is not None:
                 part = part.filter(F.unix_timestamp("ts") <= bounds[i + 1])
-            part.coalesce(1).write.mode("append").parquet(src)
+            parts.append(part)
         # sentinel AFTER the real files: final watermark = sentinel ts
         # (delay 0) > every session end + gap → full state flush
         from datetime import timedelta
 
         flush_ts = hi + timedelta(seconds=gap_seconds + 2 * 86400)
-        spark.createDataFrame([(flush_ts, sentinel_uid)], "ts timestamp, uid string").coalesce(
-            1
-        ).write.mode("append").parquet(src)
+        parts.append(spark.createDataFrame([(flush_ts, sentinel_uid)], "ts timestamp, uid string"))
+        _append_in_replay_order(parts, src)
         stream = (
             spark.readStream.schema("ts timestamp, uid string")
             .option("maxFilesPerTrigger", "1")

@@ -2,6 +2,9 @@
 """Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR (default
 /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
 
+$SPARK_GRAFT_CPUS defaults to the cores this process may run on, and the
+driver heap is sized from MemTotal (perfbench/box.py).
+
 Prints ONE JSON line:
   {"metric": ..., "value": <total sec>, "unit": "sec",
    "queries": {name: sec, ...}, "sf": ...,
@@ -21,8 +24,10 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from perfbench.box import cores, mem_total_bytes, spark_settings  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", cores()))
 PAGES_ROWS = int(os.environ.get("SPARK_GRAFT_PAGES_ROWS", "8000000"))
 
 HEADLINE = [
@@ -62,19 +67,20 @@ def main() -> None:
     from phphll_spark.functions import hll_global_distinct
     from phphll_spark.sources.pages import generate_pages_parquet
 
+    box = spark_settings(CPUS, mem_total_bytes())
     spark = (
-        SparkSession.builder.master(f"local[{CPUS}]")
+        SparkSession.builder.master(box["spark.master"])
         .appName("phphll_spark-bench")
         .config("spark.sql.shuffle.partitions", str(max(CPUS, 8)))
         .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "16g")
+        .config("spark.driver.memory", box["spark.driver.memory"])
         .config("spark.ui.enabled", "false")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
 
-    # warm the JVM + the 32 Python/Arrow workers once so timings measure
+    # warm the JVM + the Python/Arrow workers once so timings measure
     # steady-state throughput, not one-time process startup
     spark.range(0, CPUS * 4, numPartitions=CPUS).mapInPandas(
         lambda it: it, schema="id long"

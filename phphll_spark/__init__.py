@@ -23,6 +23,9 @@ from .codec import (
     serialize,
 )
 from .hll import HLL, element_bytes, hll_count, hll_merge, php_string
+from ._worker import bootstrap as _bootstrap_worker
+
+_bootstrap_worker()  # PySpark workers only: see _worker.py
 
 __all__ = [
     "HLL",

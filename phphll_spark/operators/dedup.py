@@ -345,7 +345,8 @@ def _candidate_pairs_from_sigs(
     (id, minhash) frame — split out so ``dedup_minhash`` can persist the
     signatures and reuse them for the agreement prefilter. Returns
     (pairs, est_pairs) where est_pairs ≥ the distinct pair count (the
-    capped in-bucket pair sum — used for prefilter plan choice)."""
+    in-bucket pair sum over buckets within the cap — used for prefilter
+    plan choice)."""
     if num_hashes % bands:
         raise ValueError(f"num_hashes={num_hashes} is not a multiple of bands={bands}")
     r = num_hashes // bands
@@ -376,8 +377,9 @@ def _priced_pairs(
     shared by the MinHash (band, bucket) and SimHash (chunk_idx, chunk)
     blockers. ONE lightweight job over ``rows`` (caller persists them or
     derives them narrowly from a persisted frame) prices the candidates
-    AND collects the oversized-bucket keys together: sum of
-    C(min(bucket, cap), 2) is an upper bound on in-bucket pairs
+    AND collects the oversized-bucket keys together: the sum of C(n, 2)
+    over the buckets of n ≤ cap docs (the > cap buckets are dropped, so
+    their pairs never exist) is an upper bound on in-bucket pairs
     pre-distinct (so ≥ the distinct pair count), which callers use to
     pick broadcast-vs-shuffle verification plans WITHOUT a separate
     count job on the pair frame; the > cap keys (≤ buckets·n/cap by
@@ -389,21 +391,19 @@ def _priced_pairs(
     key = F.shiftleft(F.col(c0).cast("long"), 32) + (
         F.col(c1).cast("long") + F.lit(1 << 32)
     ) % F.lit(1 << 32)
-    sizes = rows.groupBy(c0, c1).agg(F.count("*").alias("_n"))
-    if max_bucket_size is not None:
-        capped = F.least(F.col("_n"), F.lit(max_bucket_size))
-        summary = sizes.agg(
-            F.coalesce(F.sum(capped * (capped - 1) / 2), F.lit(0.0)).alias("est"),
-            F.collect_list(F.when(F.col("_n") > max_bucket_size, key)).alias("over"),
-        ).first()
-        est_pairs, oversized = int(summary["est"]), list(summary["over"])
-    else:
-        est_pairs = int(
-            sizes.agg(
-                F.coalesce(F.sum(F.col("_n") * (F.col("_n") - 1) / 2), F.lit(0.0))
-            ).first()[0]
+    n = F.col("_n")
+    over = n > max_bucket_size if max_bucket_size is not None else F.lit(False)
+    summary = (
+        rows.groupBy(c0, c1)
+        .agg(F.count("*").alias("_n"))
+        .agg(
+            # only buckets that survive the cap expand into pairs
+            F.coalesce(F.sum(F.when(~over, n * (n - 1) / 2)), F.lit(0.0)).alias("est"),
+            F.collect_list(F.when(over, key)).alias("over"),
         )
-        oversized = []
+        .first()
+    )
+    est_pairs, oversized = int(summary["est"]), list(summary["over"])
     if 0 < len(oversized) <= 100_000:
         rows = rows.filter(~key.isin(oversized))
     elif len(oversized) > 100_000:

@@ -180,6 +180,49 @@ def test_dedup_minhash_shuffle_prefilter_same_pairs(spark, neardup_docs):
     assert broadcast_path == shuffle_path and len(shuffle_path) >= 20
 
 
+def test_dedup_minhash_prices_only_buckets_within_cap(spark, neardup_docs, monkeypatch):
+    """est_pairs counts only the buckets that survive max_bucket_size: an
+    oversized bucket is dropped before pair expansion, so its pairs never
+    exist. A planted cluster of 60 identical docs (one 60-doc bucket per
+    band) under a cap of 50 would alone price C(50, 2) = 1,225 pairs per
+    band, above a limit of 1,000; it must not push the plan into the
+    shuffle regime. Output equals the forced shuffle regime's."""
+    from phphll_spark.operators import dedup
+
+    hot = spark.range(1000, 1060).select(
+        F.col("id").alias("doc_id"),
+        F.lit("one boilerplate footer copied onto every page of a site").alias("text"),
+    )
+    corpus = neardup_docs.unionByName(hot)
+    priced = []
+    candidate_pairs = dedup._candidate_pairs_from_sigs
+
+    def spy(*args, **kwargs):
+        pairs, est = candidate_pairs(*args, **kwargs)
+        priced.append(est)
+        return pairs, est
+
+    monkeypatch.setattr(dedup, "_candidate_pairs_from_sigs", spy)
+    kw = dict(threshold=0.7, num_hashes=64, bands=16, max_bucket_size=50)
+
+    def run(limit):
+        out = dedup_minhash(corpus, "doc_id", "text", broadcast_pair_limit=limit, **kw)
+        # the shuffle regime semi-joins the signatures to the candidate
+        # ids; both regimes semi-join the texts to them
+        semi_joins = out._jdf.queryExecution().executedPlan().toString().count("LeftSemi")
+        rows = sorted((r["id_a"], r["id_b"], r["jaccard_sim"]) for r in out.collect())
+        release_cached(spark)
+        return semi_joins, rows
+
+    broadcast_joins, broadcast_rows = run(1000)
+    shuffle_joins, shuffle_rows = run(0)
+    assert priced[0] <= 1000 < 50 * 49 // 2, priced
+    assert broadcast_joins < shuffle_joins
+    assert broadcast_rows == shuffle_rows
+    assert {(a, b) for a, b, _ in broadcast_rows} >= {(2 * i, 2 * i + 1) for i in range(20)}
+    assert all(a < 1000 for a, _, _ in broadcast_rows)  # the hot cluster is dropped
+
+
 def test_dedup_minhash_word_shingles(spark, neardup_docs):
     """shingle_unit='word' (the web-production Lee-et-al shingle): the
     planted adjacent-id near-dups are still found, pairs carry word-level

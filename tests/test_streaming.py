@@ -368,3 +368,43 @@ def test_stream_replays_raise_on_timeout(spark, monkeypatch):
     monkeypatch.setattr(entry_mod, "_stateful_sessions_eq_batch", lambda spark, sf_dir: True)
     with pytest.raises(TimeoutError, match="streaming snapshot"):
         entry_mod.q_streaming_daily_users_eq(spark, "unused")
+
+
+def test_replay_order_is_write_order_under_tied_mtimes(spark, tmp_path, monkeypatch):
+    """The stateful-sessions replay must see its files in write order even
+    when every write lands in one mtime tick: each parquet write here is
+    followed by forcing ALL data files to one identical mtime, and the
+    file-stream replay (one file per micro-batch) must still deliver the
+    frames in the order they were written."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    import __spark_entry__ as entry_mod
+
+    src = str(tmp_path / "src")
+    write_parquet = DataFrameWriter.parquet
+    tie_ns = time.time_ns()
+
+    def write_then_tie(self, path, *args, **kwargs):
+        write_parquet(self, path, *args, **kwargs)
+        for name in os.listdir(path):
+            os.utime(os.path.join(path, name), ns=(tie_ns, tie_ns))
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", write_then_tie)
+    n = 6
+    entry_mod._append_in_replay_order(
+        [spark.createDataFrame([(i,)], "i long") for i in range(n)], src
+    )
+    monkeypatch.undo()
+
+    seen = []
+    q = (
+        spark.readStream.schema("i long")
+        .option("maxFilesPerTrigger", "1")
+        .parquet(src)
+        .writeStream.foreachBatch(lambda df, batch_id: seen.extend(r["i"] for r in df.collect()))
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    assert q.awaitTermination(120)
+    assert seen == list(range(n))

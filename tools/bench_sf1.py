@@ -2,7 +2,8 @@
 """sf1-tier headline run (VERDICT r04 #4): the bench.py headline list over
 the 63x-sf0.1 tables in .bench_cache/sf1 (tools/gen_sf1.py — documents
 5M = 1000x, events 10M = 100x, lineitem 6M = 10x, embeddings 200k =
-100x), 16 pinned cores, 24g driver.
+100x), on every core this process may run on, with the driver
+heap sized from MemTotal (perfbench/box.py).
 
 Three near-dup queries run the PRODUCTION configuration — word 5-gram
 shingles + max_bucket_size=512 — instead of the oracle-paired char
@@ -17,7 +18,7 @@ what a 100TB pipeline runs (Lee et al.'s unit), via the same operator's
 Reps: min-of-2 for queries that finish < 120s on rep 1, single rep
 otherwise (the box is shared; heavies dominate wall either way).
 
-Usage: taskset is applied internally. python tools/bench_sf1.py
+Usage: python tools/bench_sf1.py (pin with taskset to run on fewer cores)
 Writes BENCH_sf1.json.
 """
 
@@ -25,12 +26,13 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 import subprocess
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-CPUS = 16
+sys.path.insert(0, REPO)
+
+from perfbench.box import cores, mem_total_bytes, spark_settings  # noqa: E402
 
 RUNNER = r"""
 import json, sys, time
@@ -39,14 +41,14 @@ from pyspark.sql import SparkSession, functions as F
 import __spark_entry__ as entry_mod
 
 SF = {repo!r} + "/.bench_cache/sf1"
-spark = (SparkSession.builder.master("local[16]")
-         .config("spark.sql.shuffle.partitions", "32")
+spark = (SparkSession.builder.master({master!r})
+         .config("spark.sql.shuffle.partitions", {partitions!r})
          .config("spark.sql.adaptive.enabled", "true")
-         .config("spark.driver.memory", "24g")
+         .config("spark.driver.memory", {memory!r})
          .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
          .config("spark.ui.enabled", "false").getOrCreate())
 spark.sparkContext.setLogLevel("ERROR")
-spark.range(0, 64, numPartitions=16).mapInPandas(lambda it: it, schema="id long").count()
+spark.range(0, 4 * {cpus}, numPartitions={cpus}).mapInPandas(lambda it: it, schema="id long").count()
 
 from phphll_spark.operators import (
     dedup_exact_keep, dedup_minhash, dedup_minhash_keep, release_cached,
@@ -110,17 +112,25 @@ for name in HEADLINE:
 print(json.dumps({{
     "metric": "sf1 headline wall time (documents 5M / events 10M / lineitem 6M / embeddings 200k)",
     "value": round(sum(timings.values()), 2), "unit": "sec",
-    "queries": timings, "rows": rows, "cpus": 16,
+    "queries": timings, "rows": rows, "cpus": {cpus},
     "near_dup_config": "word 5-gram shingles + max_bucket_size=512 (production; char = oracle setting, see BENCH.md)",
 }}))
 spark.stop()
-""".format(repo=REPO)
+"""
 
 
 def main() -> None:
-    pin = ["taskset", "-c", f"0-{CPUS - 1}"] if shutil.which("taskset") else []
+    cpus = cores()
+    box = spark_settings(cpus, mem_total_bytes())
+    runner = RUNNER.format(
+        repo=REPO,
+        cpus=cpus,
+        master=box["spark.master"],
+        partitions=box["spark.sql.shuffle.partitions"],
+        memory=box["spark.driver.memory"],
+    )
     out = subprocess.run(
-        [*pin, sys.executable, "-c", RUNNER], check=True, capture_output=True, text=True
+        [sys.executable, "-c", runner], check=True, capture_output=True, text=True
     )
     sys.stderr.write(out.stderr[-4000:])
     line = [l for l in out.stdout.splitlines() if l.startswith("{")][-1]
